@@ -7,6 +7,8 @@ import json
 import subprocess
 import sys
 
+from .conftest import require_ref_data
+
 
 def test_generate_collection_jsonschema(tmp_path):
     from docling_core_spark.model.generate_docs import (
@@ -47,7 +49,6 @@ def test_cli_entrypoint(tmp_path):
     assert out.returncode == 0, out.stderr
     produced = json.loads((tmp_path / "cli_docs" / "DoclingDocument.json").read_text())
     # same deep content as the reference's committed schema doc
-    ref = json.loads(
-        open("/root/reference/docs/DoclingDocument.json", encoding="utf-8").read()
-    )
+    ref_docs = require_ref_data().parent.parent / "docs"
+    ref = json.loads((ref_docs / "DoclingDocument.json").read_text(encoding="utf-8"))
     assert produced == ref

@@ -3,12 +3,21 @@
 For each (queries()[name], oracle_sql()[name]) pair at sf0.01: row count,
 column names, and order-insensitive value multiset must match (floats rounded
 to absorb engine-order summation noise).
+
+Both engines share the row code, so parity alone cannot catch a refactor that
+changes output bytes everywhere at once.  The normalized, sorted rows of every
+query are therefore also pinned by sha256 in data/oracle_digests.json, as is
+the whole oracle_sql() dict.  A digest change needs a CHANGES.md line naming
+the query and the reason.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -42,6 +51,23 @@ def _norm_rows(rows):
     return sorted(tuple(_norm_val(v) for v in r) for r in rows)
 
 
+def _sha(obj) -> str:
+    return hashlib.sha256(repr(obj).encode("utf-8")).hexdigest()
+
+
+def spark_rows(spark, name):
+    """(lower-cased columns, normalized sorted rows) of queries()[name]."""
+    sdf = QUERIES[name](spark, SF_DIR)
+    cols = [c.lower() for c in sdf.columns]
+    return cols, _norm_rows([row[c] for c in sdf.columns] for row in sdf.collect())
+
+
+def oracle_sql_digest() -> str:
+    return hashlib.sha256(
+        json.dumps(ORACLES, sort_keys=True).encode("utf-8")
+    ).hexdigest()
+
+
 @pytest.fixture(scope="module")
 def ducks():
     con = duckdb.connect()
@@ -52,23 +78,26 @@ def ducks():
 
 ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
+DIGESTS = json.loads((Path(__file__).parent / "data" / "oracle_digests.json").read_text())
+
+
+def test_oracle_sql_text_pinned():
+    assert oracle_sql_digest() == DIGESTS["oracle_sql"]
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, ducks, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    spark_cols = [c.lower() for c in sdf.columns]
-    spark_rows = [[row[c] for c in sdf.columns] for row in sdf.collect()]
+    spark_cols, a = spark_rows(spark, name)
 
     rel = ducks.sql(ORACLES[name])
     duck_cols = [c.lower() for c in rel.columns]
-    duck_rows = rel.fetchall()
+    b = _norm_rows(rel.fetchall())
 
     assert spark_cols == duck_cols, f"{name}: columns {spark_cols} vs {duck_cols}"
-    assert len(spark_rows) == len(duck_rows), f"{name}: {len(spark_rows)} vs {len(duck_rows)} rows"
-    a, b = _norm_rows(spark_rows), _norm_rows(duck_rows)
+    assert len(a) == len(b), f"{name}: {len(a)} vs {len(b)} rows"
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, f"{name}: first mismatches: {mismatches[:3]}"
+    assert _sha(a) == DIGESTS["queries"][name], f"{name}: result digest changed"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -3,13 +3,14 @@ trip it replaces (parseString(x).documentElement.toprettyxml(indent))."""
 
 from __future__ import annotations
 
-import glob
 from dataclasses import replace
 from xml.dom.minidom import parseString
 
 import pytest
 
 from docling_core_spark.functions.xml_pretty import pretty_xml
+
+from .conftest import require_ref_data
 
 
 def _minidom(compact: str, indent: str) -> str:
@@ -109,7 +110,7 @@ def test_reference_fixture_docs_match_minidom():
     from docling_core_spark.model.doc import Doc
 
     checked = 0
-    for path in sorted(glob.glob("/root/reference/test/data/doc/*.json")):
+    for path in sorted((require_ref_data() / "doc").glob("*.json")):
         try:
             doc = Doc.from_json(open(path, encoding="utf-8").read())
             compact = _compact_doclang(doc)
