@@ -83,14 +83,34 @@ def cmd_serialize(args: argparse.Namespace) -> int:
     return 0
 
 
+def add_extract_arguments(ap: argparse.ArgumentParser) -> argparse.ArgumentParser:
+    """The run_pipeline flags, shared by `cli extract` and `plans.pipeline`."""
+    ap.add_argument("--input", default=None, help="parquet path of web_pages")
+    ap.add_argument("--sf-dir", default=None, help="testdata dir for the synthetic source")
+    ap.add_argument("--output", required=True)
+    ap.add_argument("--chunker", default="hybrid", choices=["hybrid", "hierarchical"])
+    ap.add_argument("--max-tokens", type=int, default=512)
+    ap.add_argument("--no-checkpoint", action="store_true")
+    ap.add_argument("--buckets", type=int, default=16)
+    return ap
+
+
 def cmd_extract(args: argparse.Namespace) -> int:
     from docling_core_spark.plans.pipeline import build_pages, run_pipeline
     from docling_core_spark.session import get_spark
 
-    spark = get_spark(app_name="docling-extract-cli")
+    spark = get_spark(app_name="docling-extract-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     pages = build_pages(spark, args.input, args.sf_dir)
-    summary = run_pipeline(spark, pages, args.output, checkpointed=not args.no_checkpoint)
+    summary = run_pipeline(
+        spark,
+        pages,
+        args.output,
+        chunker=args.chunker,
+        max_tokens=args.max_tokens,
+        checkpointed=not args.no_checkpoint,
+        n_buckets=args.buckets,
+    )
     print(json.dumps(summary))
     return 0
 
@@ -156,11 +176,7 @@ def main(argv=None) -> int:
     ser.set_defaults(fn=cmd_serialize)
 
     ext = sub.add_parser("extract", help="run the Spark extraction pipeline")
-    ext.add_argument("--input", default=None)
-    ext.add_argument("--sf-dir", default=None)
-    ext.add_argument("--output", required=True)
-    ext.add_argument("--no-checkpoint", action="store_true")
-    ext.set_defaults(fn=cmd_extract)
+    add_extract_arguments(ext).set_defaults(fn=cmd_extract)
 
     pdf = sub.add_parser("pdf", help="parse PDF files to page text / markdown")
     pdf.add_argument("--input", required=True, help="path or glob of .pdf files")

@@ -20,7 +20,7 @@ Deliberate deviations from the PNG output (documented, not hidden):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from docling_core_spark.model.doc import Doc
 
@@ -667,7 +667,3 @@ def render_page_svg(
             poly = P.rect_to_polygon(tl_rect)
             body.append(_named_rect(poly, cell_color, cell_alpha, "cell"))
     return _svg(page_w, page_h, body)
-
-
-def _iter_pages(doc: Doc) -> Iterator[int]:  # pragma: no cover - convenience
-    yield from sorted(_pages(doc))

@@ -259,11 +259,6 @@ def _round_export_floats(obj, coord_p: Optional[int], confid_p: Optional[int]) -
             _round_export_floats(v, coord_p, confid_p)
 
 
-def ref_of(item: dict) -> str:
-    """Return the item's self reference string."""
-    return item["self_ref"]
-
-
 @lru_cache(maxsize=65536)
 def ref_array(cref: str) -> str:
     """Array name of a `#/<array>/<idx>` or `#/<name>` pointer."""
@@ -316,11 +311,6 @@ def content_layer(item: dict) -> str:
     if cl is None:
         return FURNITURE if item["self_ref"] == "#/furniture" else BODY
     return cl
-
-
-def item_label(item: dict) -> Optional[str]:
-    """DocItem label (None for groups without label)."""
-    return item.get("label")
 
 
 class Doc:

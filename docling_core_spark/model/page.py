@@ -208,13 +208,6 @@ def geometry_height(dim: dict) -> float:
     return rect_height(dim["rect"])
 
 
-def geometry_origin(dim: dict) -> tuple[float, float]:
-    if "crop_bbox" in dim:
-        return (dim["crop_bbox"]["l"], dim["crop_bbox"]["b"])
-    bb = rect_to_bbox(dim["rect"])
-    return (bb["l"], bb["b"])
-
-
 # ---------------------------------------------------------------------------
 # SegmentedPdfPage — reference page.py:631-900
 # ---------------------------------------------------------------------------

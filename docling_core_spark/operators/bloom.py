@@ -41,26 +41,22 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.primitives import (
+    round_half_up,
+    round_half_up_py,
+    ws_trim,
+    ws_trim_py,
+)
 
 BLOOM_M_BITS = 1 << 20  # 128 KiB filter for the demo scale; 100 TB runs
 BLOOM_K = 5             # size m to the kept-paragraph count (m ≈ 10n·k/ln2)
 BLOOM_SEEN_THRESHOLD = 0.5
 
-# paragraph trim class: the Java \s set, spelled out on BOTH engines (the
-# textstats.WS precedent) — F.trim strips ASCII space only and python
-# str.strip() strips all unicode whitespace; either alone would break the
-# Spark/twin LOCKSTEP on CRLF, tabs, or \x0B edges
-_TRIM_RE = r"^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$"
-_TRIM_CHARS = " \t\n\x0b\x0c\r"
-
 
 def _lines_expr():
     """array<string> of trimmed non-empty lines — the Dolma dedup unit."""
     return F.filter(
-        F.transform(
-            F.split(F.col("text"), "\n"),
-            lambda x: F.regexp_replace(x, _TRIM_RE, ""),
-        ),
+        F.transform(F.split(F.col("text"), "\n"), ws_trim),
         lambda x: F.length(x) > 0,
     )
 
@@ -146,40 +142,6 @@ def _check_filter(filt, m_bits: int) -> None:
         )
 
 
-def bloom_probe_flags(
-    paras: DataFrame, filter_bytes, m_bits: int = BLOOM_M_BITS, k: int = BLOOM_K
-) -> DataFrame:
-    """(doc_id, seen int): per-paragraph membership against the broadcast
-    filter — map-side, vectorized bit test per Arrow batch."""
-    _check_filter(filter_bytes, m_bits)
-    bc = _as_broadcast(paras, filter_bytes)
-    with_pos = paras.select(
-        "doc_id", _positions(F.col("para"), m_bits, k).alias("pos")
-    )
-
-    def probe(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            pos = rb.column(rb.schema.get_field_index("pos"))
-            # fixed-width lists: one contiguous values buffer -> (n, k)
-            mat = np.asarray(pos.flatten(), dtype=np.int64).reshape(n, k)
-            seen = ((bits[mat >> 3] >> (mat & 7).astype(np.uint8)) & 1).all(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("doc_id")),
-                    pa.array(seen.astype(np.int32)),
-                ],
-                names=["doc_id", "seen"],
-            )
-
-    return with_pos.mapInArrow(probe, "doc_id long, seen int")
-
-
 def bloom_flag_docs(
     docs: DataFrame,
     filter_bytes,
@@ -246,7 +208,7 @@ def bloom_flag_docs(
         "doc_id",
         "n_paras",
         "n_seen",
-        F.round(ratio, 6).alias("seen_frac"),
+        round_half_up(ratio, 6).alias("seen_frac"),
         (ratio < F.lit(float(threshold))).alias("keep"),
     ).transform(lambda d: canonical_order(d, "doc_id", canonical=canonical))
 
@@ -275,12 +237,9 @@ def bloom_para_dedup(
 
 
 def py_paragraphs(text: str) -> list[str]:
-    # _TRIM_CHARS, not bare strip(): python strip() removes ALL unicode
-    # whitespace while the Spark side trims the Java \s class — bare strip
-    # diverges on NBSP-edged paragraphs (and F.trim would on CRLF/tabs)
-    return [
-        p.strip(_TRIM_CHARS) for p in text.split("\n") if p.strip(_TRIM_CHARS)
-    ]
+    # the Java \s trim, not bare strip(): python strip() removes ALL
+    # unicode whitespace and diverges on NBSP-edged paragraphs
+    return [p for p in map(ws_trim_py, text.split("\n")) if p]
 
 
 def py_positions(para: str, m_bits: int, k: int) -> list[int]:
@@ -300,8 +259,6 @@ def py_bloom_dedup(
     ref_docs = docs filtered to ref_ids.  A python set of positions is
     membership-identical to the bitset (both record exactly the inserted
     positions)."""
-    import decimal
-
     filt: set[int] = set()
     for doc_id, text in doc_rows:
         if doc_id in ref_ids:
@@ -316,14 +273,8 @@ def py_bloom_dedup(
             if all(p in filt for p in py_positions(para, m_bits, k))
         )
         frac = n_seen / max(len(paras), 1)
-        # mirror Spark F.round (BigDecimal HALF_UP on the shortest repr) —
-        # builtin round() is half-to-even and diverges on exact binary
-        # ties like 1/128
-        frac6 = float(
-            decimal.Decimal(repr(frac)).quantize(
-                decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
+        # HALF_UP like Spark's F.round; builtin round() is half-to-even
+        frac6 = round_half_up_py(frac, 6)
         out.append(
             {
                 "doc_id": doc_id,

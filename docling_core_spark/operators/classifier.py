@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Row, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words
+from docling_core_spark.operators.primitives import md5_60, md5_60_py, round_half_up_py
 from docling_core_spark.operators.textstats import lang_score_expr
 
 #: hashed feature dimensions (oracle-scale default; 2^18 at crawl scale)
@@ -80,9 +81,7 @@ def _features(docs: DataFrame, dims: int) -> DataFrame:
     ).cast("int")
     dim_of = F.transform(
         F.col("ws"),
-        lambda t: F.pmod(
-            F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"), F.lit(dims)
-        ).cast("int"),
+        lambda t: F.pmod(md5_60(t), F.lit(dims)).cast("int"),
     )
     return base.select(
         "doc_id", label.alias("label"), F.array_sort(F.array_distinct(dim_of)).alias("dims")
@@ -251,14 +250,11 @@ def classifier_score(
     # z fold + sigmoid per row, score rounded HALF_UP on the shortest repr
     # (== Spark F.round, the round-2 cross-engine finding), pred from the
     # RAW s (the keep-flag rule: never compare the display-rounded value)
-    import decimal
-
     import pandas as pd
 
     bc_w = feats.sparkSession.sparkContext.broadcast(list(w))
     bias = b
     thr = float(threshold)
-    six = decimal.Decimal("0.000001")
     id_type = feats.schema["doc_id"].dataType.simpleString()
 
     def score_part(batches):
@@ -268,13 +264,7 @@ def classifier_score(
             preds = []
             for ds in pdf["dims"]:
                 s = _py_sigmoid(_py_fold_z(ds, wl, bias))
-                scores.append(
-                    float(
-                        decimal.Decimal(repr(s)).quantize(
-                            six, rounding=decimal.ROUND_HALF_UP
-                        )
-                    )
-                )
+                scores.append(round_half_up_py(s, 6))
                 preds.append(1 if s >= thr else 0)
             yield pd.DataFrame(
                 {
@@ -305,14 +295,7 @@ def py_label(text: str, norm_words_fn) -> int:
 
 
 def py_dims(text: str, dims: int, norm_words_fn) -> list[int]:
-    import hashlib
-
-    ds = {
-        int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % dims
-        for t in norm_words_fn(text)
-        if t
-    }
-    return sorted(ds)
+    return sorted({md5_60_py(t) % dims for t in norm_words_fn(text) if t})
 
 
 def py_train_score(

@@ -8,7 +8,7 @@ Scale design (the 100 TB shape):
   content: doc n-grams explode map-side, hit-test against the broadcast set
   in a broadcast hash join, and roll up per doc_id with map-side partial
   aggregation, so the only exchange carries ~one row per (doc, partition).
-- N-gram hashing uses the 60-bit md5 prefix (dedup._token_hash60), which is
+- N-gram hashing uses the 60-bit md5 prefix (primitives.md5_60), which is
   reproducible bit-for-bit in DuckDB — the whole operator is
   value-hash-oracle-checkable.  At pure scale (no oracle) swap xxhash64 in:
   same plan, cheaper hash.
@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
-from docling_core_spark.operators.dedup import _token_hash60, norm_words, shingle_grams
+from docling_core_spark.operators.dedup import norm_words, shingle_grams
+from docling_core_spark.operators.primitives import md5_60
 
 DECONTAM_NGRAM = 13  # GPT-3-style eval-overlap n-gram size
 
@@ -31,7 +32,7 @@ DECONTAM_NGRAM = 13  # GPT-3-style eval-overlap n-gram size
 def _gram_hash(gram, hash_fn: str):
     if hash_fn == "xxhash64":
         return F.xxhash64(gram)
-    return _token_hash60(gram)
+    return md5_60(gram)
 
 
 def _hashed_gram_rows(docs: DataFrame, n: int, hash_fn: str = "md5_60") -> DataFrame:

@@ -23,11 +23,9 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60
 
 NORM = lambda c: F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", "")  # noqa: E731
-
-
-_HASH60_MAX = 1 << 60
 
 
 def with_synthetic_duplicates(
@@ -46,15 +44,7 @@ def with_synthetic_duplicates(
     every engine the same known duplicate groups.  Map-only; both branches
     read one scan each (the clone branch's sampling predicate pushes down).
     """
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    clones = docs.filter(bucket < F.lit(threshold)).select(
+    clones = docs.filter(hash_gate(F.col("doc_id"), seed, rate)).select(
         (F.col("doc_id") + id_offset).alias("doc_id"), "text"
     )
     return docs.select("doc_id", "text").unionByName(clones)
@@ -67,12 +57,11 @@ def with_synthetic_duplicates_sql(
     id_offset: int = 1_000_000,
 ) -> str:
     """The with_synthetic_duplicates transformation as a DuckDB CTE body."""
-    threshold = int(rate * _HASH60_MAX)
     return f"""
   SELECT doc_id, text FROM {table}
   UNION ALL
   SELECT doc_id + {id_offset} AS doc_id, text FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {hash_gate_sql("doc_id", seed, rate)}
 """
 
 
@@ -210,7 +199,7 @@ def cap_hot_buckets(
     ever holds a whole hot bucket (the row_number cap this replaces sorted
     the ENTIRE bucket in one task — the exact skew it was defending against).
 
-    The gate hash is the cross-engine md5-60 (see _token_hash60) so the
+    The gate hash is the cross-engine md5-60 (primitives.md5_60) so the
     DuckDB / pure-python oracles replicate the surviving set exactly.
     """
     # diamond reuse: the banded frame feeds BOTH the count phase and the
@@ -224,7 +213,7 @@ def cap_hot_buckets(
         banded.groupBy(*keys).count().filter(F.col("count") > max_bucket_size)
     )
     gate_src = F.concat_ws(":", F.col(id_col), *[F.col(k) for k in keys])
-    gate = F.conv(F.substring(F.md5(gate_src), 1, 15), 16, 10).cast("long")
+    gate = md5_60(gate_src)
     return (
         banded.join(F.broadcast(counts), list(keys), "left")
         .filter(
@@ -597,17 +586,6 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 -> always positive in a signed long
 SIMHASH_BANDS = 4  # 4 x 15-bit bands: Hamming <= 3 implies >= 1 equal band
 
 
-def _token_hash60(col):
-    """60-bit cross-engine token hash: first 15 hex chars of md5 as a bigint.
-
-    Identical in Spark (conv(substr(md5,1,15),16,10)) and DuckDB
-    (('0x'||substr(md5,1,15))::BIGINT), which is what makes the SimHash
-    pipeline oracle-checkable end to end.  At pure-scale (no oracle) swap in
-    xxhash64 — same plan shape, cheaper hash.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def simhash_signatures(
     docs: DataFrame, bits: int = SIMHASH_BITS, hash_fn: str = "md5_60"
 ) -> DataFrame:
@@ -630,7 +608,7 @@ def simhash_signatures(
             F.shiftleft(F.lit(1).cast("long"), SIMHASH_BITS) - 1
         )
     else:
-        tok_hash = _token_hash60(F.col("tok"))
+        tok_hash = md5_60(F.col("tok"))
     h = tokens.withColumn("h", tok_hash)
     one = F.lit(1).cast("long")
     votes = [

@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words
-
-_HASH60_MAX = 1 << 60
+from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60
 
 DSIR_BUCKETS = 1024
 DSIR_ALPHA = 1.0
@@ -41,10 +40,6 @@ DSIR_SEED = "dsirtgt"
 DSIR_K = 100
 _GUMBEL_SEED = "dsirg"
 _GUMBEL_MOD = 1 << 52  # u mantissa bits: (h % 2^52) + 0.5 is double-exact
-
-
-def _hash60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
 def _bucket_rows(docs: DataFrame, buckets: int, hash_fn: str = "md5") -> DataFrame:
@@ -70,7 +65,7 @@ def _bucket_rows(docs: DataFrame, buckets: int, hash_fn: str = "md5") -> DataFra
     bucket = (
         F.pmod(F.xxhash64(F.col("g")), F.lit(buckets))
         if hash_fn == "xxhash64"
-        else F.pmod(_hash60(F.col("g")), F.lit(buckets))
+        else F.pmod(md5_60(F.col("g")), F.lit(buckets))
     )
     return grams.select("doc_id", bucket.cast("int").alias("bucket"))
 
@@ -103,8 +98,7 @@ def dsir_select(
         .agg(F.count("*").alias("c"))
         .localCheckpoint(eager=False)
     )
-    tgt_gate = _hash60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
-    tgt_rows = docs.filter(tgt_gate < F.lit(int(rate * _HASH60_MAX))).select("doc_id")
+    tgt_rows = docs.filter(hash_gate(F.col("doc_id"), seed, rate)).select("doc_id")
     target = (
         doc_counts.join(F.broadcast(tgt_rows), "doc_id")
         .groupBy("bucket")
@@ -156,7 +150,7 @@ def dsir_select(
     # exactly 1.0, where -ln(-ln(u)) is NULL in Spark but +inf in DuckDB
     u = (
         F.pmod(
-            _hash60(F.concat(F.col("doc_id").cast("string"), F.lit(_GUMBEL_SEED))),
+            md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(_GUMBEL_SEED))),
             F.lit(_GUMBEL_MOD),
         ).cast("double")
         + F.lit(0.5)
@@ -193,7 +187,6 @@ def dsir_select_sql(
     seed: str = DSIR_SEED,
     k: int = DSIR_K,
 ) -> str:
-    threshold = int(rate * _HASH60_MAX)
     tok = (
         "list_filter(string_split_regex(trim(regexp_replace(lower(text), "
         "'[^a-z0-9 ]', '', 'g')), ' +'), x -> x <> '')"
@@ -216,7 +209,7 @@ rows_b AS (
 ),
 tgt_docs AS (
   SELECT doc_id FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {hash_gate_sql("doc_id", seed, rate)}
 ),
 target AS (
   SELECT bucket, count(*) AS ct FROM rows_b

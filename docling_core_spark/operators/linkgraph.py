@@ -38,6 +38,8 @@ from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from docling_core_spark.operators.primitives import WS, WS_MEMBERS, round_half_up_py
+
 __all__ = [
     "HREF_PATTERN",
     "HOST_PATTERN",
@@ -50,12 +52,9 @@ __all__ = [
     "link_demo_pages_sql",
 ]
 
-# Java + RE2 common subset (no lookaround, no backrefs; \s spelled out —
-# Java \s includes \x0B, RE2's does not: the textstats WS-constant rule)
-_WS = r" \t\n\x0B\f\r"
-HREF_PATTERN = (
-    r"href[" + _WS + r"]*=[" + _WS + r"]*[\"']([^\"'<>" + _WS + r"]+)"
-)
+# Java + RE2 common subset (no lookaround, no backrefs; \s spelled out as
+# primitives.WS, because Java \s includes \x0B and RE2's does not)
+HREF_PATTERN = r"href" + WS + r"*=" + WS + r"*[\"']([^\"'<>" + WS_MEMBERS + r"]+)"
 HOST_PATTERN = r"(?i)^https?://([^/]+)"
 
 _SKIP_SCHEMES = ("mailto:", "javascript:", "data:", "tel:", "ftp:")
@@ -314,16 +313,14 @@ def py_host_pagerank(
             + (_D_NUM * (incoming.get(h, 0) + dang_share)) // _D_DEN
             for h in hosts
         }
-    from decimal import ROUND_HALF_UP, Decimal
-
-    out = []
-    for h in hosts:
-        r = ranks[h] / float(scale)
-        rr = float(
-            Decimal(repr(r)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-        )
-        out.append({"host": h, "rank_units": ranks[h], "rank": rr})
-    return out
+    return [
+        {
+            "host": h,
+            "rank_units": ranks[h],
+            "rank": round_half_up_py(ranks[h] / float(scale), 6),
+        }
+        for h in hosts
+    ]
 
 
 # ---------------------------------------------------------------------------

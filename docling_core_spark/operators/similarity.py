@@ -24,6 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.primitives import hash_gate, round_half_up_py
 
 
 def _round5_ge_boundary(eps: float) -> float:
@@ -108,11 +109,8 @@ def _assign_centroids(
     out_schema_str = ", ".join(out_fields)
 
     def assign(batches):
-        import decimal
-
         import pyarrow as pa
 
-        five = decimal.Decimal("0.00001")
         cl = bc.value
         for rb in batches:
             evs = rb.column(rb.schema.get_field_index("ev")).to_pylist()
@@ -154,16 +152,7 @@ def _assign_centroids(
                         best_id = cid
                 ids.append(best_id)
                 if emit_sim:
-                    if best_sim != best_sim:
-                        sims.append(best_sim)  # F.round(NaN, 5) is NaN
-                    else:
-                        sims.append(
-                            float(
-                                decimal.Decimal(repr(best_sim)).quantize(
-                                    five, rounding=decimal.ROUND_HALF_UP
-                                )
-                            )
-                        )
+                    sims.append(round_half_up_py(best_sim, 5))
             arrays = [
                 rb.column(rb.schema.get_field_index(c)) for c in passthrough
             ]
@@ -286,9 +275,6 @@ def ann_lsh_topk(
     )
 
 
-_HASH60_MAX = 1 << 60
-
-
 def with_synthetic_duplicate_vectors(
     embeddings: DataFrame,
     rate: float = 0.1,
@@ -302,15 +288,7 @@ def with_synthetic_duplicate_vectors(
     Same md5-sampling rule as dedup.with_synthetic_duplicates; mirrored in
     the single-process expected oracle (oracle_expected._build_similarity).
     """
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(seed))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    clones = embeddings.filter(bucket < F.lit(threshold)).select(
+    clones = embeddings.filter(hash_gate(F.col("vec_id"), seed, rate)).select(
         (F.col("vec_id") + id_offset).alias("vec_id"), "label", "embedding"
     )
     return embeddings.select("vec_id", "label", "embedding").unionByName(clones)

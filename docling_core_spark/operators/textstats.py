@@ -10,6 +10,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
+from docling_core_spark.operators.primitives import (
+    HASH60_MAX,
+    WS,
+    WS_MEMBERS,
+    gate_threshold,
+    hash_gate,
+    hash_gate_sql,
+    md5_60,
+    md5_60_sql,
+)
 
 # small fixed stopword sets per language (public lists, truncated for
 # deterministic SQL-parity between Spark and the DuckDB oracle)
@@ -21,13 +31,6 @@ LANG_STOPWORDS = {
 }
 
 _PUNCT_CLASS = r"[.,;:!?]"
-
-# Explicit ASCII whitespace class, used verbatim on BOTH engines.  Java's \s
-# is exactly [ \t\n\x0B\f\r] but RE2's \s lacks vertical tab \x0B, so a bare
-# \s in a Spark regex paired with \s in the DuckDB oracle silently diverges
-# on text containing \x0B.  Spelling the class out keeps Spark behavior
-# bit-identical to \s while making the oracle match it.
-WS = r"[ \t\n\x0B\f\r]"
 
 
 def _padded(col):
@@ -288,9 +291,6 @@ ORDER BY doc_id
 """
 
 
-_HASH60_MAX = 1 << 60
-
-
 def sample_by_hash(docs: DataFrame, rate: float = 0.1, seed: str = "s42") -> DataFrame:
     """Deterministic content-independent downsampling: keep a document iff
     its 60-bit md5(doc_id || seed) falls under rate * 2^60.
@@ -300,27 +300,21 @@ def sample_by_hash(docs: DataFrame, rate: float = 0.1, seed: str = "s42") -> Dat
     cluster size or partitioning, and re-runs/new seeds compose.  The
     60-bit md5 prefix is exactly reproducible in DuckDB
     (('0x' || substr(md5(x),1,15))::BIGINT)."""
-    threshold = int(rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    bucket = md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
     return (
         docs.select("doc_id", bucket.alias("hash60"))
-        .filter(F.col("hash60") < F.lit(threshold))
+        .filter(F.col("hash60") < F.lit(gate_threshold(rate)))
         .transform(lambda d: canonical_order(d, "doc_id"))
     )
 
 
 def sample_by_hash_sql(table: str = "documents", rate: float = 0.1, seed: str = "s42") -> str:
     """DuckDB oracle SQL for sample_by_hash."""
-    threshold = int(rate * _HASH60_MAX)
     return f"""
 SELECT doc_id,
-       ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT AS hash60
+       {md5_60_sql(f"doc_id || '{seed}'")} AS hash60
 FROM {table}
-WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+WHERE {hash_gate_sql("doc_id", seed, rate)}
 ORDER BY doc_id
 """
 
@@ -567,13 +561,7 @@ def corpus_prep_pipeline(
     corpus is keyword salad, not natural prose, and the canonical threshold
     keeps zero of it — a vacuous driver check.  Real deployments pass 2.
     """
-    threshold = int(sample_rate * _HASH60_MAX)
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    sampled = docs.filter(bucket < F.lit(threshold))
+    sampled = docs.filter(hash_gate(F.col("doc_id"), seed, sample_rate))
     # intermediate stages run canonical=False: composition keeps exactly one
     # deterministic sort, at the very end
     cleaned = text_clean(sampled, canonical=False)
@@ -630,7 +618,6 @@ def corpus_prep_pipeline_sql(
     min_stopword_hits: int = 1,
 ) -> str:
     """DuckDB oracle for corpus_prep_pipeline — the same chain as CTEs."""
-    threshold = int(sample_rate * _HASH60_MAX)
     clean_sql = text_clean_sql(table)
     gopher_sql = gopher_quality_filter_sql("cleaned_as_text", min_stopword_hits=min_stopword_hits)
     # strip the trailing ORDER BY of the fragments when nesting
@@ -639,7 +626,7 @@ def corpus_prep_pipeline_sql(
     return f"""
 WITH sampled AS (
   SELECT * FROM {table}
-  WHERE ('0x' || substr(md5(doc_id || '{seed}'), 1, 15))::BIGINT < {threshold}
+  WHERE {hash_gate_sql("doc_id", seed, sample_rate)}
 ),
 cleaned AS ({clean_body.replace(f'FROM {table}', 'FROM sampled')}),
 cleaned_as_text AS (
@@ -810,9 +797,7 @@ def winnowing_fingerprints(
         n_grams > 0,
         F.transform(
             F.sequence(F.lit(1), n_grams),
-            lambda i: F.conv(
-                F.substring(F.md5(F.substr(F.col("t"), i, F.lit(k))), 1, 15), 16, 10
-            ).cast("long"),
+            lambda i: md5_60(F.substr(F.col("t"), i, F.lit(k))),
         ),
     ).otherwise(F.array().cast("array<long>"))
     hashed = base.select("doc_id", F.length("t").alias("n_chars"), hashes.alias("h"))
@@ -1109,14 +1094,10 @@ def mix_corpora(
         .otherwise(F.lit(0.0))
         .alias("rate"),
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    bucket = md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
     return (
         with_tok.join(F.broadcast(rates), "lang")
-        .filter(bucket.cast("double") < F.col("rate") * F.lit(float(_HASH60_MAX)))
+        .filter(bucket.cast("double") < F.col("rate") * F.lit(float(HASH60_MAX)))
         .select("doc_id", "lang", "ws_tokens", F.round("rate", 9).alias("rate"))
         .transform(lambda d: canonical_order(d, "doc_id"))
     )
@@ -1133,10 +1114,9 @@ def mix_corpora_sql(
     wcase = "CASE " + " ".join(
         f"WHEN lang = '{k}' THEN {float(w)}" for k, w in sorted(weights.items())
     ) + " ELSE 0.0 END"
-    ws = r"[ \t\n\x0B\f\r]"
     n_tok = (
         "CAST(CASE WHEN length(trim(text)) = 0 THEN 0 "
-        f"ELSE length(regexp_split_to_array(trim(text), '{ws}+')) END AS BIGINT)"
+        f"ELSE length(regexp_split_to_array(trim(text), '{WS}+')) END AS BIGINT)"
     )
     return f"""
 WITH with_tok AS (
@@ -1155,7 +1135,7 @@ rates AS (
 SELECT w.doc_id, w.lang, w.ws_tokens, round(r.rate, 9) AS rate
 FROM with_tok w JOIN rates r USING (lang)
 WHERE (('0x' || substr(md5(w.doc_id || '{seed}'), 1, 15))::BIGINT)::DOUBLE
-      < r.rate * {float(_HASH60_MAX)}
+      < r.rate * {float(HASH60_MAX)}
 ORDER BY w.doc_id
 """
 
@@ -1705,12 +1685,12 @@ def url_filter_sql(table: str = "documents") -> str:
 # content value may be quoted (spaces allowed inside) or unquoted (the
 # capture stops at quote/>, junk tokens fall out at token matching).
 ROBOTS_META_NC = (
-    r"(?i)<meta[^>]*name" + WS + "*=" + WS + r"*[\"']?robots[\"' \t\n\x0B\f\r]"
+    r"(?i)<meta[^>]*name" + WS + "*=" + WS + r"*[\"']?robots[\"'" + WS_MEMBERS + "]"
     r"[^>]*content" + WS + "*=" + WS + r"*[\"']?([^\"'>]*)"
 )
 ROBOTS_META_CN = (
     r"(?i)<meta[^>]*content" + WS + "*=" + WS + r"*[\"']?([^\"'>]*)[\"']?"
-    r"[^>]*name" + WS + "*=" + WS + r"*[\"']?robots[\"' \t\n\x0B\f\r/>]"
+    r"[^>]*name" + WS + "*=" + WS + r"*[\"']?robots[\"'" + WS_MEMBERS + "/>]"
 )
 
 

@@ -18,7 +18,6 @@ leak across code edits.  Building sf0.01 takes a few seconds, once.
 
 from __future__ import annotations
 
-import decimal
 import hashlib
 import json
 import os
@@ -28,6 +27,12 @@ from typing import Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from docling_core_spark.operators.primitives import (
+    hash_gate_py,
+    md5_60_py,
+    round_half_up_py,
+)
 
 _PKG_ROOT = Path(__file__).resolve().parent
 
@@ -54,14 +59,6 @@ _EXPECTED_DIR_TAG = "2a1ae742ecd07709"
 def expected_dir(sf_dir: str) -> Path:
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     return Path(tempfile.gettempdir()) / f"docling_expected_{sf_name}_{_EXPECTED_DIR_TAG}"
-
-
-def _round_half_up(x: Optional[float], digits: int = 4) -> Optional[float]:
-    """Mirror Spark's F.round (BigDecimal HALF_UP on the shortest repr)."""
-    if x is None:
-        return None
-    q = decimal.Decimal(1).scaleb(-digits)
-    return float(decimal.Decimal(repr(x)).quantize(q, rounding=decimal.ROUND_HALF_UP))
 
 
 def _percentile(sorted_vals: list[float], q: float) -> float:
@@ -267,10 +264,10 @@ def _build_extraction(sf_dir: str, out: Path) -> None:
         "total_tables": totals["tables"],
         "total_pictures": totals["pictures"],
         "total_chunks": totals["chunks"],
-        "avg_texts": _round_half_up(totals["texts"] / n),
+        "avg_texts": round_half_up_py(totals["texts"] / n, 4),
     }
     for d in range(1, 10):
-        coll[f"texts_p{d * 10}"] = _round_half_up(_percentile(svals, d / 10))
+        coll[f"texts_p{d * 10}"] = round_half_up_py(_percentile(svals, d / 10), 4)
     _write(
         out / "extract_collection_profile.parquet",
         [coll],
@@ -358,10 +355,7 @@ def _build_minhash(sf_dir: str, out: Path) -> None:
             members = [
                 d
                 for d in members
-                if int(
-                    hashlib.md5(f"{d}:{band}:{bval}".encode()).hexdigest()[:15], 16
-                )
-                % cnt
+                if md5_60_py(f"{d}:{band}:{bval}") % cnt
                 < cap
             ]
         members = sorted(members)
@@ -372,7 +366,7 @@ def _build_minhash(sf_dir: str, out: Path) -> None:
     rows = []
     for a, b in sorted(cand):
         sa, sb = shingle_sets[a], shingle_sets[b]
-        j = _round_half_up(len(sa & sb) / max(len(sa | sb), 1), 6)
+        j = round_half_up_py(len(sa & sb) / max(len(sa | sb), 1), 6)
         if j >= threshold:
             rows.append({"doc_a": a, "doc_b": b, "jaccard": j})
     _write(
@@ -479,7 +473,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
     b6 = {vid: _srp_bucket(v, w6) for vid, v in vecs.items()}
     qv, qb = vecs[0], b6[0]
     scored = [
-        {"vec_id": vid, "label": labels[vid], "cos_sim": _round_half_up(_cosine(vecs[vid], qv), 5)}
+        {"vec_id": vid, "label": labels[vid], "cos_sim": round_half_up_py(_cosine(vecs[vid], qv), 5)}
         for vid in vecs
         if vid != 0 and b6[vid] == qb
     ]
@@ -495,7 +489,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
     # assignment/probe/tie-break/rounding as the Spark operator
     n_centroids, nprobe, iterations, topk = 16, 4, 2, 10
     qvecs = {
-        vid: [int(_round_half_up(float(x) * 1_000_000.0, 0)) for x in v]
+        vid: [int(round_half_up_py(float(x) * 1_000_000.0, 0)) for x in v]
         for vid, v in vecs.items()
     }
     evecs = {vid: [float(q) for q in qv] for vid, qv in qvecs.items()}
@@ -540,7 +534,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
             "vec_id": vid,
             "label": labels[vid],
             "centroid_id": _assign(ev),
-            "cos_sim": _round_half_up(_cosine(ev, qv0), 5),
+            "cos_sim": round_half_up_py(_cosine(ev, qv0), 5),
         }
         for vid, ev in evecs.items()
         if vid != 0
@@ -560,12 +554,8 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
     # under vec_id + 1_000_000) so the pair-emission path is value-checked —
     # the raw vectors have no pairs above threshold (vacuous 0-row green)
     dup_rate, dup_seed, dup_offset = 0.1, "dupv7", 1_000_000
-    dup_threshold = int(dup_rate * (1 << 60))
     for vid in sorted(vecs):
-        h60 = int(
-            hashlib.md5(f"{vid}{dup_seed}".encode()).hexdigest()[:15], 16
-        )
-        if h60 < dup_threshold:
+        if hash_gate_py(vid, dup_seed, dup_rate):
             vecs[vid + dup_offset] = vecs[vid]
             labels[vid + dup_offset] = labels[vid]
 
@@ -584,16 +574,13 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
             members = [
                 vid
                 for vid in members
-                if int(
-                    hashlib.md5(f"{vid}:{bucket}".encode()).hexdigest()[:15], 16
-                )
-                % cnt
+                if md5_60_py(f"{vid}:{bucket}") % cnt
                 < cap
             ]
         members = sorted(members)
         for i, a in enumerate(members):
             for b in members[i + 1 :]:
-                cs = _round_half_up(_cosine(vecs[a], vecs[b]), 5)
+                cs = round_half_up_py(_cosine(vecs[a], vecs[b]), 5)
                 if cs >= 0.95:
                     pairs.append({"vec_a": a, "vec_b": b, "cos_sim": cs})
     pairs.sort(key=lambda r: (r["vec_a"], r["vec_b"]))
@@ -611,7 +598,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
     # the cap_hot_buckets gate never become candidates
     sd_eps, sd_cap, sd_n_cents, sd_iters = 0.95, 1024, 16, 2
     sd_q = {
-        vid: [int(_round_half_up(float(x) * 1_000_000.0, 0)) for x in v]
+        vid: [int(round_half_up_py(float(x) * 1_000_000.0, 0)) for x in v]
         for vid, v in vecs.items()
     }
     sd_e = {vid: [float(q) for q in qv] for vid, qv in sd_q.items()}
@@ -647,7 +634,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
     sd_assigned = {}
     for vid, ev in sd_e.items():
         cid, sim = _sd_assign(ev)
-        sd_assigned[vid] = (cid, _round_half_up(sim, 5))
+        sd_assigned[vid] = (cid, round_half_up_py(sim, 5))
     sd_groups: dict[int, list[int]] = {}
     for vid, (cid, _s) in sd_assigned.items():
         sd_groups.setdefault(cid, []).append(vid)
@@ -658,7 +645,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
             members = [
                 vid
                 for vid in members
-                if int(hashlib.md5(f"{vid}:{cid}".encode()).hexdigest()[:15], 16) % cnt
+                if md5_60_py(f"{vid}:{cid}") % cnt
                 < sd_cap
             ]
         for a_id in members:
@@ -668,7 +655,7 @@ def _build_similarity(sf_dir: str, out: Path) -> None:
                 pa_, pb_ = sd_assigned[a_id][1], sd_assigned[b_id][1]
                 if (pb_, b_id) >= (pa_, a_id):
                     continue
-                if _round_half_up(_cosine(sd_e[a_id], sd_e[b_id]), 5) >= sd_eps:
+                if round_half_up_py(_cosine(sd_e[a_id], sd_e[b_id]), 5) >= sd_eps:
                     sd_removed.add(a_id)
                     break
     _write(
@@ -1163,12 +1150,7 @@ def _build_bloom(sf_dir: str, out: Path) -> None:
     demo = [(d, demo_text(d, t)) for d, t in doc_rows]
     # with_synthetic_duplicates twin (dedup.py:33; round-6 mirror contract)
     rate, seed, offset = 0.1, "dup42", 1_000_000
-    threshold = int(rate * (1 << 60))
-    clones = [
-        (d + offset, t)
-        for d, t in demo
-        if int(hashlib.md5(f"{d}{seed}".encode()).hexdigest()[:15], 16) < threshold
-    ]
+    clones = [(d + offset, t) for d, t in demo if hash_gate_py(d, seed, rate)]
     corpus = demo + clones
     ref_ids = {d for d, _ in corpus if d % 3 == 0}
     rows = py_bloom_dedup(corpus, ref_ids)  # twin owns the HALF_UP rounding
@@ -1200,9 +1182,9 @@ def _build_classifier(sf_dir: str, out: Path) -> None:
         [(r[0], r[1]) for r in doc_rows], norm_words_fn=_norm_words
     )
     model = [
-        {"dim": d, "weight": _round_half_up(x, 6)} for d, x in enumerate(w) if x != 0.0
+        {"dim": d, "weight": round_half_up_py(x, 6)} for d, x in enumerate(w) if x != 0.0
     ]
-    model.append({"dim": -1, "weight": _round_half_up(b, 6)})
+    model.append({"dim": -1, "weight": round_half_up_py(b, 6)})
     model.sort(key=lambda r: r["dim"])
     _write(
         out / "quality_classifier_train.parquet",
@@ -1215,7 +1197,7 @@ def _build_classifier(sf_dir: str, out: Path) -> None:
             {
                 "doc_id": doc_id,
                 "label": label,
-                "score": _round_half_up(s, 6),
+                "score": round_half_up_py(s, 6),
                 "pred": 1 if s >= 0.5 else 0,
             }
             for doc_id, label, s in scores

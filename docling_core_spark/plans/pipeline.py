@@ -15,10 +15,9 @@ Local smoke:
 from __future__ import annotations
 
 import argparse
-import json
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from docling_core_spark.operators.extract import (
     explode_chunks,
@@ -72,38 +71,27 @@ def run_pipeline(
     explode_chunks(docs).write.mode("overwrite").parquet(f"{output}/chunks")
     lineage_metrics(docs).write.mode("overwrite").parquet(f"{output}/lineage")
 
-    n_docs = docs.count()
-    n_chunks = spark.read.parquet(f"{output}/chunks").count()
-    n_errors = docs.filter("error is not null").count()
-    return {**summary, "docs": n_docs, "chunks": n_chunks, "errors": n_errors, "output": output}
+    # the run's counts, from the small lineage table just written: its
+    # count(*), count(error) and sum(size(chunks)) per partition add up to
+    # the doc, error and chunk-row counts (error rows carry chunks = [])
+    n_docs, n_errors, n_chunks = (
+        spark.read.parquet(f"{output}/lineage")
+        .agg(F.sum("n_pages"), F.sum("n_errors"), F.sum("n_chunks"))
+        .first()
+    )
+    return {
+        **summary,
+        "docs": n_docs or 0,
+        "chunks": n_chunks or 0,
+        "errors": n_errors or 0,
+        "output": output,
+    }
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", default=None, help="parquet path of web_pages")
-    ap.add_argument("--sf-dir", default=None, help="testdata dir for the synthetic source")
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--chunker", default="hybrid", choices=["hybrid", "hierarchical"])
-    ap.add_argument("--max-tokens", type=int, default=512)
-    ap.add_argument("--no-checkpoint", action="store_true")
-    ap.add_argument("--buckets", type=int, default=16)
-    args = ap.parse_args()
+    from docling_core_spark.cli import add_extract_arguments, cmd_extract
 
-    from docling_core_spark.session import get_spark
-
-    spark = get_spark(app_name="docling-extract-pipeline")
-    spark.sparkContext.setLogLevel("WARN")
-    pages = build_pages(spark, args.input, args.sf_dir)
-    summary = run_pipeline(
-        spark,
-        pages,
-        args.output,
-        chunker=args.chunker,
-        max_tokens=args.max_tokens,
-        checkpointed=not args.no_checkpoint,
-        n_buckets=args.buckets,
-    )
-    print(json.dumps(summary))
+    cmd_extract(add_extract_arguments(argparse.ArgumentParser()).parse_args())
 
 
 if __name__ == "__main__":

@@ -5,10 +5,10 @@ lineage".  Protocol (Iceberg-style idempotent partition writes, expressed
 over plain parquet so it runs anywhere):
 
 - input is bucketed by ``pmod(xxhash64(url), n_buckets)``;
-- buckets are processed in waves; each wave writes its output under
-  ``out_dir/data/bucket=<b>/`` and then appends one row per completed bucket
-  to the ``out_dir/_progress/`` log (commit point: data before progress, so
-  a crash between the two re-processes the bucket — idempotent because the
+- buckets are processed one after another; each writes its output under
+  ``out_dir/data/bucket=<b>/`` and then appends one row to the
+  ``out_dir/_progress/`` log (commit point: data before progress, so a
+  crash between the two re-processes the bucket — idempotent because the
   bucket directory is overwritten whole);
 - resume = anti-join the bucket list against the progress log: only
   unfinished buckets are re-run;
@@ -74,49 +74,43 @@ def run_checkpointed(
     out_dir: str,
     stage_fn: Callable[[DataFrame], DataFrame],
     n_buckets: int = 16,
-    buckets_per_wave: int = 4,
     key: str = "url",
 ) -> dict:
-    """Run stage_fn over pages in resumable bucket waves.
+    """Run stage_fn over pages one resumable bucket at a time.
 
-    Returns a summary dict {completed, skipped, waves, rows_out}.
-    Waves keep several buckets in flight so intra-wave parallelism stays at
-    cluster width; a killed job resumes at the first uncommitted bucket.
+    Returns a summary dict {completed, skipped, rows_out, n_buckets}.
+    Each bucket is one job at full cluster width; a killed job resumes at
+    the first uncommitted bucket.
     """
     bucketed = pages.withColumn("_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
     done = completed_buckets(spark, out_dir, n_buckets=n_buckets)
     todo = [b for b in range(n_buckets) if b not in done]
     rows_out = 0
-    waves = 0
-    for i in range(0, len(todo), buckets_per_wave):
-        wave = todo[i : i + buckets_per_wave]
-        waves += 1
-        for b in wave:
-            t0 = time.perf_counter()
-            part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-            out = stage_fn(part)
-            target = f"{out_dir}/data/bucket={b}"
-            out.write.mode("overwrite").parquet(target)
-            written = spark.read.parquet(target)
-            stats = written.agg(
-                F.count("*").alias("n"),
-                F.count("error").alias("ne") if "error" in written.columns else F.lit(0).alias("ne"),
-            ).first()
-            rows_out += stats["n"]
-            _commit_bucket(
-                out_dir,
-                b,
-                {
-                    "n_buckets": n_buckets,
-                    "rows": stats["n"],
-                    "errors": stats["ne"],
-                    "wall_sec": round(time.perf_counter() - t0, 3),
-                },
-            )
+    for b in todo:
+        t0 = time.perf_counter()
+        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
+        out = stage_fn(part)
+        target = f"{out_dir}/data/bucket={b}"
+        out.write.mode("overwrite").parquet(target)
+        written = spark.read.parquet(target)
+        stats = written.agg(
+            F.count("*").alias("n"),
+            F.count("error").alias("ne") if "error" in written.columns else F.lit(0).alias("ne"),
+        ).first()
+        rows_out += stats["n"]
+        _commit_bucket(
+            out_dir,
+            b,
+            {
+                "n_buckets": n_buckets,
+                "rows": stats["n"],
+                "errors": stats["ne"],
+                "wall_sec": round(time.perf_counter() - t0, 3),
+            },
+        )
     return {
         "completed": len(todo),
         "skipped": len(done),
-        "waves": waves,
         "rows_out": rows_out,
         "n_buckets": n_buckets,
     }

@@ -69,7 +69,7 @@ _CRASH_SCRIPT = textwrap.dedent(
     cp._commit_bucket = crashing_commit
     spark = get_spark(app_name="crash-run", cpus=4, shuffle_partitions=8)
     pages = web_pages_df(spark, SF_DIR).limit(150)
-    cp.run_checkpointed(spark, pages, out_dir, _stage, n_buckets=N_BUCKETS, buckets_per_wave=2)
+    cp.run_checkpointed(spark, pages, out_dir, _stage, n_buckets=N_BUCKETS)
     print("UNREACHABLE")  # the kill must fire before all buckets commit
     """
 )
@@ -104,14 +104,12 @@ def test_sigkill_mid_wave_then_resume_is_byte_identical(spark, tmp_path):
     pages.count()
 
     # resume in this (fresh) process: only uncommitted buckets re-run
-    resumed = run_checkpointed(
-        spark, pages, crashed, _stage, n_buckets=N_BUCKETS, buckets_per_wave=2
-    )
+    resumed = run_checkpointed(spark, pages, crashed, _stage, n_buckets=N_BUCKETS)
     assert resumed["skipped"] == CRASH_AT_COMMIT - 1
     assert resumed["completed"] == N_BUCKETS - (CRASH_AT_COMMIT - 1)
 
     # uninterrupted reference run
-    run_checkpointed(spark, pages, clean, _stage, n_buckets=N_BUCKETS, buckets_per_wave=2)
+    run_checkpointed(spark, pages, clean, _stage, n_buckets=N_BUCKETS)
 
     a = sorted(map(tuple, read_output(spark, crashed).collect()))
     b = sorted(map(tuple, read_output(spark, clean).collect()))

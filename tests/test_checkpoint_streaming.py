@@ -31,7 +31,7 @@ def test_checkpoint_run_and_resume(spark, tmp_path):
     pages = web_pages_df(spark, SF_DIR).limit(120).cache()
     n_in = pages.count()
 
-    summary = run_checkpointed(spark, pages, out, _stage, n_buckets=8, buckets_per_wave=4)
+    summary = run_checkpointed(spark, pages, out, _stage, n_buckets=8)
     assert summary["completed"] == 8 and summary["skipped"] == 0
     assert read_output(spark, out).count() == n_in
 
@@ -41,7 +41,7 @@ def test_checkpoint_run_and_resume(spark, tmp_path):
         (Path(out) / "_progress" / f"bucket_{b}.json").unlink()
         shutil.rmtree(Path(out) / "data" / f"bucket={b}")
 
-    resumed = run_checkpointed(spark, pages, out, _stage, n_buckets=8, buckets_per_wave=4)
+    resumed = run_checkpointed(spark, pages, out, _stage, n_buckets=8)
     assert resumed["skipped"] == 5 and resumed["completed"] == 3
     assert read_output(spark, out).count() == n_in
 

@@ -41,14 +41,13 @@ def test_target_slice_scores_higher_on_average(docs):
     # documents must average a higher log-ratio than the rest (the DSIR
     # premise: weights rank target-likeness)
     rows = dsir_select(docs).collect()
-    from docling_core_spark.operators.dsir import DSIR_RATE, DSIR_SEED, _HASH60_MAX
-    import hashlib
+    from docling_core_spark.operators.dsir import DSIR_RATE, DSIR_SEED
+    from docling_core_spark.operators.primitives import hash_gate_py
 
-    thr = int(DSIR_RATE * _HASH60_MAX)
     in_t, out_t = [], []
     for r in rows:
-        h = int(hashlib.md5(f"{r['doc_id']}{DSIR_SEED}".encode()).hexdigest()[:15], 16)
-        (in_t if h < thr else out_t).append(r["log_ratio"])
+        in_target = hash_gate_py(r["doc_id"], DSIR_SEED, DSIR_RATE)
+        (in_t if in_target else out_t).append(r["log_ratio"])
     assert sum(in_t) / len(in_t) > sum(out_t) / len(out_t)
 
 
