@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words, shingle_grams
-from docling_core_spark.operators.primitives import md5_60
+from docling_core_spark.operators.primitives import md5_60, md5_60_sql
 
 DECONTAM_NGRAM = 13  # GPT-3-style eval-overlap n-gram size
 
@@ -133,7 +133,7 @@ hashed AS (
                   ELSE [array_to_string(words[i+1:i+{n}], ' ')
                         for i in range(0, len(words) - {n} + 1)]
              END),
-           g -> ('0x' || substr(md5(g), 1, 15))::BIGINT) AS hs
+           g -> {md5_60_sql("g")}) AS hs
   FROM normed
 ),
 bench AS (

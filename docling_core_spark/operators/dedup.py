@@ -23,7 +23,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
-from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60
+from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60, md5_60_sql
 
 NORM = lambda c: F.regexp_replace(F.lower(c), r"[^a-z0-9 ]", "")  # noqa: E731
 
@@ -685,7 +685,7 @@ WITH toks AS (
   FROM {table}
 ),
 hashed AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks
+  SELECT doc_id, {md5_60_sql("tok")} AS h FROM toks
 ),
 votes AS (
   SELECT doc_id, t.b,

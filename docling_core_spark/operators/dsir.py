@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from docling_core_spark.operators.canon import canonical_order
 from docling_core_spark.operators.dedup import norm_words
-from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60
+from docling_core_spark.operators.primitives import hash_gate, hash_gate_sql, md5_60, md5_60_sql
 
 DSIR_BUCKETS = 1024
 DSIR_ALPHA = 1.0
@@ -204,7 +204,7 @@ grams AS (
 ),
 rows_b AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(g), 1, 15))::BIGINT % {buckets} AS INT) AS bucket
+         CAST({md5_60_sql("g")} % {buckets} AS INT) AS bucket
   FROM grams
 ),
 tgt_docs AS (
@@ -239,7 +239,7 @@ weights AS (
 keyed AS (
   SELECT doc_id, log_ratio,
          round(log_ratio + (-ln(-ln(
-           (((('0x' || substr(md5(doc_id || '{_GUMBEL_SEED}'), 1, 15))::BIGINT) % {_GUMBEL_MOD})::DOUBLE + 0.5)
+           ((({md5_60_sql(f"doc_id || '{_GUMBEL_SEED}'")}) % {_GUMBEL_MOD})::DOUBLE + 0.5)
            / {float(_GUMBEL_MOD)}
          ))), 6) AS gumbel_key
   FROM weights

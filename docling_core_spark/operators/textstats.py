@@ -125,14 +125,14 @@ def quality_scores_sql(table: str = "documents") -> str:
 SELECT doc_id,
   CAST(length(text) AS BIGINT) AS n_chars,
   CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE length(regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) END AS BIGINT) AS n_words,
+       ELSE length(regexp_split_to_array(trim(text), '{WS}+')) END AS BIGINT) AS n_words,
   round((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))
         / greatest(length(text), 1)::DOUBLE, 6) AS punct_ratio,
   round((length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))
         / greatest(length(text), 1)::DOUBLE, 6) AS digit_ratio,
   CAST({lang_score_sql('text', 'en')} AS INT) AS en_stopword_hits,
   round(length(text) / greatest(CASE WHEN length(trim(text)) = 0 THEN 0
-        ELSE length(regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) END, 1)::DOUBLE, 4) AS avg_word_len
+        ELSE length(regexp_split_to_array(trim(text), '{WS}+')) END, 1)::DOUBLE, 4) AS avg_word_len
 FROM {table}
 ORDER BY doc_id
 """
@@ -155,8 +155,8 @@ def token_counts_sql(table: str = "documents") -> str:
     return f"""
 SELECT doc_id,
   CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-       ELSE length(regexp_split_to_array(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) END AS BIGINT) AS ws_tokens,
-  CAST(ceil(length(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]', '', 'g')) / 4.0) AS BIGINT) AS bpe_tokens_est
+       ELSE length(regexp_split_to_array(trim(text), '{WS}+')) END AS BIGINT) AS ws_tokens,
+  CAST(ceil(length(regexp_replace(text, '{WS}', '', 'g')) / 4.0) AS BIGINT) AS bpe_tokens_est
 FROM {table}
 ORDER BY doc_id
 """
@@ -261,7 +261,7 @@ line_agg AS (
   FROM per_line GROUP BY doc_id
 ),
 words AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+') AS ws
+  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '{WS}+') AS ws
   FROM {table} WHERE length(trim(text)) > 0
 ),
 bigrams AS (
@@ -299,7 +299,7 @@ def sample_by_hash(docs: DataFrame, rate: float = 0.1, seed: str = "s42") -> Dat
     filter is pushed to the scan), no RNG state, identical selection on any
     cluster size or partitioning, and re-runs/new seeds compose.  The
     60-bit md5 prefix is exactly reproducible in DuckDB
-    (('0x' || substr(md5(x),1,15))::BIGINT)."""
+    (primitives.md5_60_sql)."""
     bucket = md5_60(F.concat(F.col("doc_id").cast("string"), F.lit(seed)))
     return (
         docs.select("doc_id", bucket.alias("hash60"))
@@ -432,13 +432,13 @@ def gopher_quality_filter_sql(
     thresholds, same reject-tag order; concat_ws skips NULLs identically)."""
     n_words = (
         "CASE WHEN length(trim(text)) = 0 THEN 0 "
-        "ELSE length(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+')) END"
+        f"ELSE length(regexp_split_to_array(lower(trim(text)), '{WS}+')) END"
     )
-    word_chars = "length(regexp_replace(text, '[ \\t\\n\\x0B\\f\\r]', '', 'g'))"
+    word_chars = f"length(regexp_replace(text, '{WS}', '', 'g'))"
     mean_wl = f"round({word_chars} / greatest({n_words}, 1)::DOUBLE, 6)"
     alpha_words = (
         "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE "
-        "len(list_filter(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\x0B\\f\\r]+'), "
+        f"len(list_filter(regexp_split_to_array(lower(trim(text)), '{WS}+'), "
         "x -> regexp_matches(x, '[a-z]'))) END"
     )
     alpha_frac = f"round({alpha_words} / greatest({n_words}, 1)::DOUBLE, 6)"
@@ -742,7 +742,7 @@ def c4_line_filter_sql(table: str = "documents") -> str:
     line_ok = (
         "(suffix(trim(x), '.') OR suffix(trim(x), '!') OR suffix(trim(x), '?')"
         " OR suffix(trim(x), '\"'))"
-        f" AND len(regexp_split_to_array(trim(x), '[ \\t\\n\\x0B\\f\\r]+')) >= {C4_MIN_LINE_WORDS}"
+        f" AND len(regexp_split_to_array(trim(x), '{WS}+')) >= {C4_MIN_LINE_WORDS}"
         f" AND {markers}"
     )
     kept = f"list_filter({lines}, x -> {line_ok})"
@@ -841,7 +841,7 @@ WITH base AS (
 hashed AS (
   SELECT doc_id, length(t) AS n_chars,
          CASE WHEN length(t) >= {k}
-              THEN [('0x' || substr(md5(substr(t, CAST(i AS INT), {k})), 1, 15))::BIGINT
+              THEN [{md5_60_sql(f"substr(t, CAST(i AS INT), {k})")}
                     for i in range(1, length(t) - {k} + 2)]
               ELSE [] END AS h
   FROM base
@@ -1134,7 +1134,7 @@ rates AS (
 )
 SELECT w.doc_id, w.lang, w.ws_tokens, round(r.rate, 9) AS rate
 FROM with_tok w JOIN rates r USING (lang)
-WHERE (('0x' || substr(md5(w.doc_id || '{seed}'), 1, 15))::BIGINT)::DOUBLE
+WHERE ({md5_60_sql(f"w.doc_id || '{seed}'")})::DOUBLE
       < r.rate * {float(HASH60_MAX)}
 ORDER BY w.doc_id
 """
