@@ -27,14 +27,28 @@ def get_spark(
     rows (hash positions, feature dims, doc ids) now fill 8192-row batches
     instead of paying the Python-boundary round trip 32x as often.  The
     row cap is a backstop for pathologically tiny rows.
+
+    Python workers are forked by ``docling_core_spark.pydaemon``, not
+    ``pyspark.daemon``.  Every task calls ``importlib.invalidate_caches()``,
+    which on CPython < 3.13 makes each cached ``zipimporter`` re-read its
+    whole archive: ~0.17 s of CPU per task, paid by every Python stage
+    (extract, main_content, classifier, bloom, ...).  The package daemon
+    re-reads an archive only when it changed.  On Python >= 3.13 it adds
+    nothing to ``pyspark.daemon``.  It relies on one invariant: the package
+    root is on ``PYTHONPATH`` before the JVM starts (exported below), because
+    Spark launches the daemon before any ``addPyFile``, so ``--py-files``
+    alone cannot provide it.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 32)
 
-    # Executor python workers must be able to import this package regardless
-    # of the driver's cwd: export the repo root on PYTHONPATH before the JVM
-    # (and hence the python worker daemon) starts.  On a real cluster the
-    # equivalent is `spark-submit --py-files docling_core_spark.zip`.
+    # Executor python workers, and the daemon that forks them, must be able
+    # to import this package regardless of the driver's cwd: export the repo
+    # root on PYTHONPATH before the JVM (and hence the daemon) starts.  On a
+    # real cluster the package must likewise be importable by the executors'
+    # python at launch (installed, or on spark.executorEnv.PYTHONPATH);
+    # `addPyFile` / `--py-files` zips reach the workers per task, after the
+    # daemon has started.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if repo_root not in existing.split(os.pathsep):
@@ -56,5 +70,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.python.daemon.module", "docling_core_spark.pydaemon")
     )
     return builder.getOrCreate()

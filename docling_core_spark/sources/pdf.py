@@ -65,6 +65,13 @@ class PdfError(ValueError):
     """Unparseable PDF (bad header, unrecoverable xref, no page tree)."""
 
 
+# Decoded bytes allowed per stream and per page's concatenated content: a
+# FlateDecode bomb (KBs that inflate to GBs) fails that stream instead of
+# the task.  Text-bearing streams are far smaller; images are never decoded.
+MAX_INFLATE_BYTES = 64 << 20
+_INFLATE_STEP = 1 << 20
+
+
 # ---------------------------------------------------------------------------
 # object model
 # ---------------------------------------------------------------------------
@@ -374,6 +381,24 @@ def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
     return bytes(out)
 
 
+def _inflate(data: bytes) -> bytes:
+    """``zlib.decompress`` in bounded steps: raises :class:`PdfError` past
+    ``MAX_INFLATE_BYTES`` and ``zlib.error`` on a truncated stream."""
+    d = zlib.decompressobj()
+    parts: list[bytes] = []
+    total = 0
+    while not d.eof:
+        part = d.decompress(data, _INFLATE_STEP)
+        data = d.unconsumed_tail
+        if not (part or data or d.eof):
+            raise zlib.error("incomplete or truncated stream")
+        total += len(part)
+        if total > MAX_INFLATE_BYTES:
+            raise PdfError(f"FlateDecode output exceeds {MAX_INFLATE_BYTES} bytes")
+        parts.append(part)
+    return b"".join(parts)
+
+
 def _decode_stream(doc: "PdfDoc", st: Stream) -> bytes:
     """Apply the stream's filter chain (Flate with predictors, ASCIIHex)."""
     data = st.raw
@@ -389,7 +414,7 @@ def _decode_stream(doc: "PdfDoc", st: Stream) -> bytes:
         f = str(doc.resolve(f) or "")
         p = doc.resolve(p) or {}
         if f == "FlateDecode":
-            data = zlib.decompress(data)
+            data = _inflate(data)
             pred = doc.resolve(p.get("Predictor", 1)) or 1
             if pred >= 10:
                 data = _png_unpredict(
@@ -703,11 +728,15 @@ class PdfDoc:
         """Concatenated decoded content streams of a page."""
         contents = self.resolve(page.get("Contents"))
         parts: list[bytes] = []
+        total = 0
         items = contents if isinstance(contents, list) else [contents]
         for item in items:
             st = self.resolve(item)
             if isinstance(st, Stream):
                 parts.append(_decode_stream(self, st))
+                total += len(parts[-1])
+                if total > MAX_INFLATE_BYTES:
+                    raise PdfError(f"page content exceeds {MAX_INFLATE_BYTES} bytes")
         return b"\n".join(parts)
 
     def page_fonts(self, page: dict) -> dict[str, dict]:

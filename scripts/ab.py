@@ -2,10 +2,12 @@
 
     python scripts/ab.py --base <rev> [--pairs N] [--metric <json.path>] -- <cmd ...>
 
-The base revision is checked out into a temporary ``git worktree``; ``cmd``
-then runs as a subprocess alternately there and in the working tree, with
-the tree as its cwd and on its PYTHONPATH.  The side that runs first swaps
-every pair, so slow drift of a shared host does not favour one side (the
+The base revision is exported with ``git archive`` into a temporary
+directory, so nothing is registered in the repository's ``.git`` and an
+interrupted run leaves no stale worktree behind.  ``cmd`` then runs as a
+subprocess alternately there and in the working tree, with the tree as its
+cwd and on its PYTHONPATH.  The side that runs first swaps every pair, so
+slow drift of a shared host does not favour one side (the
 alternating-subprocess protocol of BENCH/AB_FULLFORMAT_R6.md).
 
 A sample is the command's wall time in seconds or, with ``--metric``, a
@@ -74,10 +76,11 @@ def main(argv: list[str] | None = None) -> int:
         cwd=REPO, check=True, capture_output=True, text=True,
     ).stdout.strip()
     base_tree = Path(tempfile.mkdtemp(prefix=f"ab-{rev}-")) / "tree"
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", str(base_tree), rev],
-        cwd=REPO, check=True, capture_output=True,
-    )
+    base_tree.mkdir()
+    archive = subprocess.run(
+        ["git", "archive", rev], cwd=REPO, check=True, capture_output=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", str(base_tree)], input=archive, check=True)
     trees = {"base": base_tree, "head": REPO}
     samples: dict[str, list[float]] = {"base": [], "head": []}
     wins = 0
@@ -97,11 +100,6 @@ def main(argv: list[str] | None = None) -> int:
                 flush=True,
             )
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(base_tree)],
-            cwd=REPO, capture_output=True,
-        )
-        subprocess.run(["git", "worktree", "prune"], cwd=REPO, capture_output=True)
         shutil.rmtree(base_tree.parent, ignore_errors=True)
 
     n = len(samples["head"])

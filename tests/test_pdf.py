@@ -7,6 +7,8 @@ the same contract battery as tests/test_warc.py."""
 from __future__ import annotations
 
 import os
+import tracemalloc
+import zlib
 
 import pytest
 
@@ -135,8 +137,9 @@ class TestRoundTrip:
 # ---------------------------------------------------------------------------
 
 
-def _single_page_pdf(content: bytes) -> bytes:
-    """Wrap a raw content stream in a minimal one-page PDF."""
+def _single_page_pdf(content: bytes, filter_entry: bytes = b"") -> bytes:
+    """Wrap a raw content stream in a minimal one-page PDF; ``filter_entry``
+    (e.g. ``b"/Filter /FlateDecode "``) goes into the stream dict."""
     data = build_pdf([{"width": 612, "height": 792, "texts": []}], compress=False)
     # splice: replace the (empty) content stream body
     old = b"stream\nBT\nET\nendstream"
@@ -145,9 +148,16 @@ def _single_page_pdf(content: bytes) -> bytes:
     out = data.replace(old, new)
     # fix the Length entry of the content object
     out = out.replace(
-        b"<< /Length 5 >>", b"<< /Length %d >>" % (len(content) + 1)
+        b"<< /Length 5 >>", b"<< %s/Length %d >>" % (filter_entry, len(content) + 1)
     )
     return out
+
+
+def _deflated_zeros(n_bytes: int) -> bytes:
+    """A deflate stream of ``n_bytes`` zero bytes, built 1 MiB at a time."""
+    z = zlib.compressobj(9)
+    block = bytes(1 << 20)
+    return b"".join(z.compress(block) for _ in range(n_bytes >> 20)) + z.flush()
 
 
 class TestContentStream:
@@ -242,6 +252,39 @@ class TestHostile:
         corrupted = data[: i + 10] + b"999999999" + data[j:]
         pages = pdf_text_pages(corrupted)
         assert [p["text"] for p in pages] == EXPECTED_TEXTS
+
+    def test_flate_bomb_fails_the_page_in_bounded_memory(self):
+        # ~100 KB of deflate that inflates to 96 MiB of zeros: decoding stops
+        # at the per-stream cap instead of materializing the whole stream
+        bomb_bytes = 96 << 20
+        data = _single_page_pdf(_deflated_zeros(bomb_bytes), b"/Filter /FlateDecode ")
+        doc = parse_pdf(data)
+        tracemalloc.start()
+        try:
+            with pytest.raises(PdfError, match="exceeds"):
+                doc.page_content(doc.pages()[0])
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < bomb_bytes * 3 // 4
+        assert pdf_text_pages(data)[0]["cells"] == []  # page-level isolation
+
+    def test_repeated_content_stream_is_capped_per_page(self):
+        # each reference inflates under the per-stream cap; together they
+        # exceed it, and a Contents array may repeat a reference freely
+        data = _single_page_pdf(_deflated_zeros(40 << 20), b"/Filter /FlateDecode ")
+        data = data.replace(b"/Contents 5 0 R", b"/Contents [5 0 R 5 0 R]")
+        doc = parse_pdf(data)
+        with pytest.raises(PdfError, match="page content exceeds"):
+            doc.page_content(doc.pages()[0])
+
+    def test_truncated_flate_stream_still_fails_the_page(self):
+        body = zlib.compress(b"BT /F1 10 Tf 1 0 0 1 72 700 Tm (x) Tj ET")
+        data = _single_page_pdf(body[:-6], b"/Filter /FlateDecode ")
+        doc = parse_pdf(data)
+        with pytest.raises(zlib.error):
+            doc.page_content(doc.pages()[0])
+        assert pdf_text_pages(data)[0]["cells"] == []
 
     def test_cyclic_page_tree_terminates(self):
         data = (
