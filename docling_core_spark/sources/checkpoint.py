@@ -5,15 +5,18 @@ lineage".  Protocol (Iceberg-style idempotent partition writes, expressed
 over plain parquet so it runs anywhere):
 
 - input is bucketed by ``pmod(xxhash64(url), n_buckets)``;
-- buckets are processed one after another; each writes its output under
-  ``out_dir/data/bucket=<b>/`` and then appends one row to the
-  ``out_dir/_progress/`` log (commit point: data before progress, so a
-  crash between the two re-processes the bucket — idempotent because the
-  bucket directory is overwritten whole);
+- each bucket is one Spark job that writes its output under
+  ``out_dir/data/bucket=<b>/``; at most two bucket jobs are in flight, so
+  the next bucket fills the cores the previous one's slowest tasks leave
+  idle (``_IN_FLIGHT``);
+- the calling thread then appends one row per bucket to the
+  ``out_dir/_progress/`` log, in completion order (commit point: data
+  before progress, so a crash between the two re-processes the bucket —
+  idempotent because the bucket directory is overwritten whole);
 - resume = anti-join the bucket list against the progress log: only
-  unfinished buckets are re-run;
-- per-bucket lineage (pages, errors, bytes, chunks, wall) is recorded in the
-  progress log itself.
+  unfinished buckets are re-run, whatever order the others committed in;
+- per-bucket lineage (rows, errors, wall) is recorded in the progress log
+  itself; rows and errors are observed on the bucket's own write.
 
 At cluster scale the same protocol maps onto Iceberg
 ``REPLACE PARTITIONS`` / dynamic-partition-overwrite commits.
@@ -24,10 +27,19 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from itertools import islice
 from pathlib import Path
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+# Bucket jobs in flight at once (why two: run_checkpointed's docstring).
+# Four in flight measured slower than two on 4 cores
+# (BENCH/AB_CHECKPOINT_OVERLAP.md).
+_IN_FLIGHT = 2
 
 
 def _progress_path(out_dir: str) -> Path:
@@ -68,6 +80,29 @@ def _commit_bucket(out_dir: str, bucket: int, lineage: dict) -> None:
     tmp.rename(p / f"bucket_{bucket}.json")
 
 
+def _write_bucket(
+    spark: SparkSession,
+    part: DataFrame,
+    stage_fn: Callable[[DataFrame], DataFrame],
+    target: str,
+    tag: str,
+    t0: float,
+) -> dict:
+    """One bucket's job (run on a pool thread): stage_fn, the overwrite of
+    its directory, and its lineage, counted by an Observation on the write
+    itself instead of a re-read.  wall_sec runs from submit to write end."""
+    spark.sparkContext.addJobTag(tag)
+    out = stage_fn(part)
+    counts = [F.count(F.lit(1)).alias("rows")]
+    if "error" in out.columns:
+        counts.append(F.count("error").alias("errors"))
+    obs = Observation()
+    out.observe(obs, *counts).write.mode("overwrite").parquet(target)
+    wall = time.perf_counter() - t0
+    stats = obs.get
+    return {"rows": stats["rows"], "errors": stats.get("errors", 0), "wall_sec": round(wall, 3)}
+
+
 def run_checkpointed(
     spark: SparkSession,
     pages: DataFrame,
@@ -76,38 +111,61 @@ def run_checkpointed(
     n_buckets: int = 16,
     key: str = "url",
 ) -> dict:
-    """Run stage_fn over pages one resumable bucket at a time.
+    """Run stage_fn over pages in resumable buckets, two jobs in flight.
 
     Returns a summary dict {completed, skipped, rows_out, n_buckets}.
-    Each bucket is one job at full cluster width; a killed job resumes at
-    the first uncommitted bucket.
+    Each bucket is one job at full cluster width, run on a pool thread that
+    inherits the caller's job group, tags and local properties.  At most
+    ``_IN_FLIGHT`` (2) bucket jobs run at once.  Spark's default FIFO
+    scheduler offers free slots to jobs in submission order, so the older
+    bucket keeps every slot it can use and the newer one backfills the
+    slots its stragglers (a jumbo page, a slow partition) leave idle.  Two
+    is enough for that backfill and keeps shuffle data in flight bounded at
+    two buckets.  The calling
+    thread commits each bucket as its job finishes, so commit order may
+    differ from bucket order; a killed run resumes with the buckets that
+    have no commit record.  If a bucket's job fails, the other in-flight
+    bucket is cancelled and awaited, nothing more is committed, and the
+    error is raised.
     """
     bucketed = pages.withColumn("_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
     done = completed_buckets(spark, out_dir, n_buckets=n_buckets)
     todo = [b for b in range(n_buckets) if b not in done]
+    queue = iter(todo)
+    run_tag = f"checkpoint-{uuid.uuid4().hex}"
     rows_out = 0
-    for b in todo:
-        t0 = time.perf_counter()
-        part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-        out = stage_fn(part)
-        target = f"{out_dir}/data/bucket={b}"
-        out.write.mode("overwrite").parquet(target)
-        written = spark.read.parquet(target)
-        stats = written.agg(
-            F.count("*").alias("n"),
-            F.count("error").alias("ne") if "error" in written.columns else F.lit(0).alias("ne"),
-        ).first()
-        rows_out += stats["n"]
-        _commit_bucket(
-            out_dir,
-            b,
-            {
-                "n_buckets": n_buckets,
-                "rows": stats["n"],
-                "errors": stats["ne"],
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            },
-        )
+    in_flight: dict[Future, int] = {}
+    with ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="checkpoint-bucket") as pool:
+        try:
+            while True:
+                for b in islice(queue, _IN_FLIGHT - len(in_flight)):
+                    part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
+                    # wrapped per bucket: each gets its own copy of the
+                    # caller's local properties, which its job tag extends
+                    job = inheritable_thread_target(spark)(_write_bucket)
+                    fut = pool.submit(
+                        job, spark, part, stage_fn, f"{out_dir}/data/bucket={b}",
+                        f"{run_tag}-{b}", time.perf_counter(),
+                    )
+                    in_flight[fut] = b
+                if not in_flight:
+                    break
+                finished, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+                for fut in sorted(finished, key=in_flight.__getitem__):
+                    lineage = fut.result()
+                    b = in_flight.pop(fut)
+                    _commit_bucket(out_dir, b, {"n_buckets": n_buckets, **lineage})
+                    rows_out += lineage["rows"]
+        except BaseException:
+            # Cancel the other bucket in flight and wait for it; repeat the
+            # cancel, since one that lands before its job is submitted (or
+            # between two of its jobs) finds nothing to cancel.
+            pending = set(in_flight)
+            while pending:
+                for fut in pending:
+                    spark.sparkContext.cancelJobsWithTag(f"{run_tag}-{in_flight[fut]}")
+                pending = wait(pending, timeout=0.5).not_done
+            raise
     return {
         "completed": len(todo),
         "skipped": len(done),

@@ -48,23 +48,34 @@ def parse_sitemap(data: bytes) -> list[dict]:
 
     Total function: a file that is not XML (or not a sitemap) yields [];
     a malformed ENTRY is skipped, the rest of the file parses.  Gzip
-    (.xml.gz) is decompressed transparently."""
+    (.xml.gz, one or more members) is decompressed transparently."""
     import xml.etree.ElementTree as ET
     import zlib
 
     if data[:2] == b"\x1f\x8b":
         # BOUNDED inflate (the warc.py contract): the sitemaps spec caps a
         # file at 50 MB uncompressed — a decompression bomb must yield
-        # zero rows, never an OOM-killed task.  EOFError (truncated
-        # member) and zlib.error (corrupt body) are total-function cases
-        # alongside BadGzipFile/OSError.
+        # zero rows, never an OOM-killed task.  A .gz file may hold several
+        # concatenated members (gzip.decompress reads them all), so every
+        # member is drained via unused_data and the cap applies to their
+        # total.  Bytes after the last member that do not start another
+        # one are ignored; zlib.error (corrupt body) is a total-function
+        # case alongside OSError/EOFError.
+        members: list[bytes] = []
+        total = 0
         try:
-            d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
-            data = d.decompress(data, _MAX_SITEMAP_BYTES + 1)
-            if len(data) > _MAX_SITEMAP_BYTES:
-                return []
+            while data[:2] == b"\x1f\x8b":
+                d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
+                members.append(d.decompress(data, _MAX_SITEMAP_BYTES + 1 - total))
+                total += len(members[-1])
+                if total > _MAX_SITEMAP_BYTES:
+                    return []
+                if not d.eof:
+                    break  # truncated member: parse what it inflated to
+                data = d.unused_data
         except (OSError, EOFError, zlib.error):
             return []
+        data = b"".join(members)
     if len(data) > _MAX_SITEMAP_BYTES:
         return []
     try:

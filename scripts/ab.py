@@ -1,6 +1,6 @@
 """Interleaved A/B of one command: a base revision against the working tree.
 
-    python scripts/ab.py --base <rev> [--pairs N] [--metric <json.path>] -- <cmd ...>
+    python scripts/ab.py --base <rev> [--pairs N] [--metric <json.path> [--higher]] -- <cmd ...>
 
 The base revision is exported with ``git archive`` into a temporary
 directory, so nothing is registered in the repository's ``.git`` and an
@@ -12,7 +12,8 @@ alternating-subprocess protocol of BENCH/AB_FULLFORMAT_R6.md).
 
 A sample is the command's wall time in seconds or, with ``--metric``, a
 number read from the last JSON object the command prints to stdout
-(``--metric timing.s`` reads ``{"timing": {"s": ...}}``); lower is better.
+(``--metric timing.s`` reads ``{"timing": {"s": ...}}``); lower is better,
+or higher with ``--higher`` (a throughput such as pages/s).
 The script prints every pair, each side's median and quartiles, and how
 many pairs the working tree won.
 """
@@ -65,6 +66,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--base", required=True, help="git revision to compare against")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--metric", default=None, help="dotted path into the last JSON line")
+    ap.add_argument("--higher", action="store_true", help="a higher metric is better")
     ap.add_argument("cmd", nargs=argparse.REMAINDER, help="-- command to run")
     args = ap.parse_args(argv)
     cmd = args.cmd[1:] if args.cmd[:1] == ["--"] else args.cmd
@@ -91,11 +93,12 @@ def main(argv: list[str] | None = None) -> int:
             got = {side: _sample(cmd, trees[side], args.metric) for side in order}
             for side in order:
                 samples[side].append(got[side])
-            won = got["head"] < got["base"]
+            won = got["head"] > got["base"] if args.higher else got["head"] < got["base"]
+            gain = got["head"] / got["base"] if args.higher else got["base"] / got["head"]
             wins += won
             print(
                 f"pair {i + 1:2d} ({order[0]} first): base {got['base']:.4f}  "
-                f"head {got['head']:.4f}  speedup {got['base'] / got['head']:.3f}"
+                f"head {got['head']:.4f}  speedup {gain:.3f}"
                 f"{'  head won' if won else ''}",
                 flush=True,
             )
@@ -106,7 +109,8 @@ def main(argv: list[str] | None = None) -> int:
     for side in ("base", "head"):
         q1, med, q3 = _quartiles(samples[side])
         print(f"{side}: median {med:.4f}  q1 {q1:.4f}  q3 {q3:.4f}  (n={n})")
-    speedup = statistics.median(samples["base"]) / statistics.median(samples["head"])
+    base_med, head_med = statistics.median(samples["base"]), statistics.median(samples["head"])
+    speedup = head_med / base_med if args.higher else base_med / head_med
     print(f"median speedup of head: {speedup:.3f}x   head won {wins} of {n} pairs")
     return 0
 

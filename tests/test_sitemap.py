@@ -125,6 +125,26 @@ class TestReviewRegressions:
         assert len(bomb) < 1 << 20  # compresses tiny
         assert parse_sitemap(bomb) == []  # bounded inflate -> zero rows
 
+    def test_multi_member_gzip_yields_every_entry(self):
+        import gzip as _g
+
+        xml = build_sitemap([{"loc": "https://a.com/1"}, {"loc": "https://a.com/2"}])
+        data = _g.compress(xml[:60]) + _g.compress(xml[60:])
+        assert _g.decompress(data) == xml
+        assert [e["loc"] for e in parse_sitemap(data)] == [
+            "https://a.com/1",
+            "https://a.com/2",
+        ]
+
+    def test_decompression_bomb_across_members_bounded(self):
+        import gzip as _g
+
+        # each member stays under the cap; only their total exceeds it
+        member = _g.compress(b" " * (20 << 20))
+        bomb = _g.compress(b"<urlset>") + member * 3 + _g.compress(b"</urlset>")
+        assert len(bomb) < 1 << 20
+        assert parse_sitemap(bomb) == []
+
     def test_oversized_plain_xml_rejected(self):
         big = b"<urlset>" + b" " * (51 << 20) + b"</urlset>"
         assert parse_sitemap(big) == []
